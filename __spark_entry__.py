@@ -1084,7 +1084,7 @@ _BATCH_QUERIES = [
 def _q_search_many(spark, sf_dir):
     """Batch retrieval: 5 queries scored in ONE Spark job — union postings
     scanned once, per-term decode shared across queries inside each shard
-    task, one window merge (SearchIndex.search_many; the offline
+    task, one per-query merge on the driver (SearchIndex.search_many; the offline
     query-log/eval-set companion to the per-query serving path)."""
     idx = _index(spark, sf_dir)
     return idx.search_many(_BATCH_QUERIES, k=10).select(

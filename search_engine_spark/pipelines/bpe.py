@@ -49,12 +49,13 @@ def _initial_segments(word_col: str) -> Column:
 
 def _pairs(sym: Column) -> Column:
     """Adjacent symbol pairs of one word's segment array, in-row."""
-    return F.expr(
-        "CASE WHEN size(sym) >= 2 THEN "
-        "transform(sequence(1, size(sym) - 1), "
-        "i -> struct(sym[i-1] AS l, sym[i] AS r)) "
-        "ELSE CAST(array() AS array<struct<l:string,r:string>>) END"
-    )
+    return F.when(
+        F.size(sym) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(sym) - 1),
+            lambda i: F.struct(sym[i - 1].alias("l"), sym[i].alias("r")),
+        ),
+    ).otherwise(F.expr("CAST(array() AS array<struct<l:string,r:string>>)"))
 
 
 def _apply_merge(left: str, right: str) -> Column:
@@ -80,7 +81,6 @@ def learn_bpe(
     df: DataFrame,
     n_merges: int = 10,
     min_pair_count: int = 2,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus (see module doc).

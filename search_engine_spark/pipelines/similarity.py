@@ -680,6 +680,19 @@ def _sum_lr(it) -> float:
 # ---------------------------------------------------------------------------
 
 
+def _pq_sub_dim(emb: DataFrame, vec_col: str, m: int, caller: str) -> int:
+    """Subvector length ``dim // m``, read from the first row. Raises on an
+    empty frame and on a dimension ``m`` does not divide (the trailing
+    ``dim % m`` components would otherwise be dropped silently)."""
+    first = emb.select(F.size(vec_col).alias("d")).first()
+    if first is None:
+        raise ValueError(f"{caller}: empty input")
+    dim = int(first["d"])
+    if dim % m != 0:
+        raise ValueError(f"{caller}: dim {dim} not divisible by m={m}")
+    return dim // m
+
+
 def pq_codebooks(
     emb: DataFrame,
     m: int = 4,
@@ -701,13 +714,7 @@ def pq_codebooks(
     first row). -> (sub, code, svec): ``m * n_codes`` rows — KB-sized,
     broadcastable by construction.
     """
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("pq_codebooks: empty input")
-    dim = int(first["d"])
-    if dim % m != 0:
-        raise ValueError(f"pq_codebooks: dim {dim} not divisible by m={m}")
-    sub_d = dim // m
+    sub_d = _pq_sub_dim(emb, vec_col, m, "pq_codebooks")
     sample = (
         emb.select(
             _vecd(F.col(vec_col)).alias("v"),
@@ -792,11 +799,10 @@ def pq_encode(
     Scale shape: codebooks collapse to ONE broadcast row (a sub-major
     sorted array of (sub, code, svec) structs) and encoding is a single
     codegen'd projection — zero exchanges over the corpus, same pattern
-    as the IVF assignment. -> (vec_id, codes: array<int>).
+    as the IVF assignment. Requires a fixed dimension divisible by ``m``
+    (validated on the first row). -> (vec_id, codes: array<int>).
     """
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    dim = int(first["d"])
-    sub_d = dim // m
+    sub_d = _pq_sub_dim(emb, vec_col, m, "pq_encode")
     carr = codebooks.agg(
         F.sort_array(
             F.collect_list(F.struct("sub", "code", "svec"))

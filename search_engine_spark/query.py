@@ -18,9 +18,12 @@ top-k):
    k-sized min-heap (the north rule's pruning; the analogue of the
    reference's bucket-refinement candidate subtraction,
    ``ranking/words.rs:66``);
-4. global merge: ``orderBy(score desc, docid asc).limit(k)`` over <=
-   num_shards*k candidate rows, then join display columns back from
-   doc_stats (reference O2 ``obkv_to_json``, ``src/lib.rs:209-234``).
+4. global merge of the <= num_shards*k candidate rows: for serving-sized k
+   on the driver, with the pks from a pyarrow point read of doc_stats and
+   the result returned as an Arrow local relation (collecting it starts no
+   job); for deep exports ``orderBy(score desc, docid asc).limit(k)`` and a
+   join back to doc_stats (reference O2 ``obkv_to_json``,
+   ``src/lib.rs:209-234``).
 
 Total order everywhere (heap, bounds, merge): (score desc, docid asc).
 WAND prunes only on STRICT inequality so bound==threshold ties are still
@@ -40,6 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from search_engine_spark.codecs import PostingReader
 from search_engine_spark.config import IndexConfig, IndexSettings
@@ -62,6 +66,36 @@ from search_engine_spark.query_parse import (
 
 RESULT_SCHEMA = "docid long, score double"
 OUT_SCHEMA = "rank int, docid long, pk string, score double"
+
+# Most shard top-k rows the driver collects to merge, paginate and look up
+# pks itself (``execute`` and ``search_many``). Above it — deep exports —
+# the merge stays a distributed sort/window plus a join against doc_stats.
+DRIVER_TAIL_MAX_ROWS = 100_000
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: "str | StructType"
+) -> DataFrame:
+    """A DataFrame over driver-built rows, as an Arrow local relation.
+
+    ``spark.createDataFrame(list_of_tuples, schema)`` pickles the rows into
+    a parallelized Python RDD, so collecting even ten of them starts a
+    Spark job and a Python worker. From a ``pyarrow.Table`` Spark plans a
+    ``LocalRelation``: ``collect()`` starts no job, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. ``schema`` is a DDL
+    string or a ``StructType``; its names, types and nullability are kept.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -861,10 +895,9 @@ class SearchIndex:
     ) -> list[dict]:
         """Serving-path search: identical semantics and ranking to
         ``search()`` but returns plain dicts. On the driver point-read path
-        no Spark DataFrame is materialized at all (collecting even a 10-row
-        local DataFrame costs ~0.35s of py4j round-trips — measured at 4M
-        docs, where the query itself runs in ~0.25s); cluster-path queries
-        collect their k-bounded result."""
+        the scorer's tuples are returned as they are, with no DataFrame
+        built or collected; cluster-path queries collect their k-bounded
+        local result (``execute``)."""
         plan = self.plan(query, k, **plan_kw)
         if not plan.term_weights:
             return []
@@ -900,9 +933,11 @@ class SearchIndex:
         (docid, contribution) arrays across all queries containing that
         term — head terms shared by thousands of queries are decoded once
         per shard instead of once per query — then emits a per-(query,
-        shard) top-k. The global merge is a single window over
-        <= n_queries * num_shards * k rows. Net: one job, two exchanges
-        (shard group + merge), postings decoded exactly once.
+        shard) top-k. Those <= n_queries * num_shards * k rows are merged
+        per query on the driver, with one pyarrow pk point read for the
+        whole batch; above ``DRIVER_TAIL_MAX_ROWS`` the merge is a window
+        plus a broadcast pk join instead. Net: one job, one exchange (shard
+        group), postings decoded exactly once.
 
         ``queries``: list of ``(query_id, text)`` pairs or a DataFrame with
         columns ``(query_id, query)`` (collected — the query side is the
@@ -950,7 +985,7 @@ class SearchIndex:
 
         union = sorted({w for _, ws in parsed for w in ws})
         if not union:
-            return self.spark.createDataFrame([], out_schema)
+            return _local_frame(self.spark, [], out_schema)
         # one dictionary job for the whole batch (vs one point read per
         # query term in plan()); idf over the indexed count like search()
         df_map = {
@@ -969,7 +1004,7 @@ class SearchIndex:
                 continue
             batch.append((qid if qid_is_int else str(qid), hit))
         if not batch:
-            return self.spark.createDataFrame([], out_schema)
+            return _local_frame(self.spark, [], out_schema)
 
         avgdl, k1, b = self.avgdl, self.config.k1, self.config.b
         block_size = self.config.block_size
@@ -1041,6 +1076,28 @@ class SearchIndex:
         shard_topk = pq_df.groupby("shard").applyInPandas(
             score_shard, schema=f"query_id {qid_type}, docid long, score double"
         )
+        if len(batch) * kk * self.config.num_shards <= DRIVER_TAIL_MAX_ROWS:
+            # the same driver-side tail as execute(): per-query merge, then
+            # one pk point read for every hit of the batch
+            hits: dict = {qid: [] for qid, _ in batch}
+            for r in shard_topk.collect():
+                hits[r["query_id"]].append((r["docid"], r["score"]))
+            ranked = {
+                qid: sorted(pairs, key=lambda x: (-x[1], x[0]))[:kk]
+                for qid, pairs in hits.items()
+            }
+            pk_map = self._pk_lookup(
+                sorted({d for pairs in ranked.values() for d, _ in pairs}))
+            rows = [
+                (qid, i + 1, int(d), pk_map.get(int(d)), float(s))
+                for qid, pairs in ranked.items()
+                for i, (d, s) in enumerate(pairs)
+            ]
+            # rank NOT NULL: the schema row_number() gives the distributed tail
+            return _local_frame(
+                self.spark, rows,
+                out_schema.replace("rank int", "rank int NOT NULL"),
+            )
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("docid").asc()
         )
@@ -1106,7 +1163,7 @@ class SearchIndex:
         if query:
             p = self.plan(query, k)
             if not p.term_weights:
-                return self.spark.createDataFrame([], "rank int, docid long, pk string")
+                return _local_frame(self.spark, [], "rank int, docid long, pk string")
             base = base.join(self.matching_docids(list(p.term_weights)), "docid")
         order = [
             (F.col(c).asc_nulls_last() if d.lower().startswith("asc")
@@ -1159,9 +1216,14 @@ class SearchIndex:
         names = ["n_docs", "avgdl", "n_terms", "n_postings", "total_tokens"] + [
             f"field_{c}" for c in attr_cols
         ]
-        pairs = ", ".join(f"'{s}', {s}" for s in names)
+        # attribute names come from the caller's schema: labels are
+        # literals and columns are quoted references, never SQL text
+        pairs = [
+            x for s in names
+            for x in (F.lit(s), F.col("`" + s.replace("`", "``") + "`"))
+        ]
         return (
-            row.selectExpr(f"stack({len(names)}, {pairs}) AS (stat, value)")
+            row.select(F.stack(F.lit(len(names)), *pairs).alias("stat", "value"))
             .orderBy("stat")
         )
 
@@ -1198,7 +1260,7 @@ class SearchIndex:
         ))
         out_schema = "term string, suggestion string, dist int, df long"
         if not words:
-            return self.spark.createDataFrame([], out_schema)
+            return _local_frame(self.spark, [], out_schema)
         budgets = [
             (
                 w,
@@ -1208,7 +1270,7 @@ class SearchIndex:
             )
             for w in words
         ]
-        qdf = self.spark.createDataFrame(budgets, "term string, budget int")
+        qdf = _local_frame(self.spark, budgets, "term string, budget int")
         dist = F.levenshtein("suggestion", "term")
         cand = (
             self._terms.select(F.col("term").alias("suggestion"), "df")
@@ -1244,9 +1306,8 @@ class SearchIndex:
         two paths are rank-identical (tested). Head terms at web scale blow
         the threshold and take the cluster path automatically.
         """
-        spark = self.spark
         if not plan.term_weights:
-            return spark.createDataFrame([], OUT_SCHEMA)
+            return _local_frame(self.spark, [], OUT_SCHEMA)
 
         if execution == "driver" and filter_ast is not None:
             raise ValueError(
@@ -1310,24 +1371,15 @@ class SearchIndex:
         # for serving-sized k the global merge, pagination and pk lookup
         # run on the driver (one job instead of three extra stages: global
         # sort + broadcast join + window). Measured at 4M docs / local[32]:
-        # 0.6-1.2s per warm query saved. Large k (deep exports) keeps the
-        # distributed tail.
-        if (plan.k + offset) * self.config.num_shards <= 100_000:
+        # 0.6-1.2s per warm query saved. The result is a local relation, so
+        # collecting it starts no second job. Large k (deep exports) keeps
+        # the distributed tail.
+        if (plan.k + offset) * self.config.num_shards <= DRIVER_TAIL_MAX_ROWS:
             merged = sorted(
                 ((r["docid"], r["score"]) for r in shard_topk.collect()),
                 key=lambda x: (-x[1], x[0]),
             )[offset : offset + plan.k]
-            if not merged:
-                return self.spark.createDataFrame([], OUT_SCHEMA)
-            pk_map = self._pk_lookup([d for d, _ in merged])
-            pk_t = self._doc_stats.schema["pk"].dataType.simpleString()
-            return self.spark.createDataFrame(
-                [
-                    (offset + i + 1, int(d), pk_map.get(int(d)), float(s))
-                    for i, (d, s) in enumerate(merged)
-                ],
-                f"rank int, docid long, pk {pk_t}, score double",
-            )
+            return self._rows_to_df(self._ranked_rows(merged, offset))
 
         topk = shard_topk.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(
             plan.k + offset
@@ -1444,9 +1496,9 @@ class SearchIndex:
     ) -> list[tuple]:
         """Point-read execution: prune to the query's buckets/terms with
         pyarrow, score in-process with the same _wand_topk/_exhaustive_topk
-        used by the shard UDFs. -> (rank, docid, pk, score) tuples; latency
-        is ~ms instead of a Spark job (``search_rows`` exposes them without
-        the ~0.35s py4j cost of materializing even a 10-row DataFrame)."""
+        used by the shard UDFs. -> (rank, docid, pk, score) tuples, in
+        milliseconds and without a Spark job; ``search_rows`` returns them
+        as they are and ``execute`` wraps them in a local relation."""
         import pyarrow.dataset as ds
 
         readers = self._readers_for(all_terms)
@@ -1480,7 +1532,11 @@ class SearchIndex:
                 syn_phrases=plan.syn_phrases,
                 partial_tombs=self._partial_tombs,
             )
-        pairs = pairs[offset:]
+        return self._ranked_rows(pairs[offset:], offset)
+
+    def _ranked_rows(self, pairs: list[tuple], offset: int) -> list[tuple]:
+        """(docid, score) pairs in rank order -> (rank, docid, pk, score)
+        tuples ranked from ``offset + 1``, pks by one point read."""
         if not pairs:
             return []
         pk_map = self._pk_lookup([d for d, _ in pairs])
@@ -1491,10 +1547,10 @@ class SearchIndex:
 
     def _rows_to_df(self, rows: list[tuple]) -> DataFrame:
         if not rows:
-            return self.spark.createDataFrame([], OUT_SCHEMA)
+            return _local_frame(self.spark, [], OUT_SCHEMA)
         pk_t = self._doc_stats.schema["pk"].dataType.simpleString()
-        return self.spark.createDataFrame(
-            rows, f"rank int, docid long, pk {pk_t}, score double"
+        return _local_frame(
+            self.spark, rows, f"rank int, docid long, pk {pk_t}, score double"
         )
 
     def highlight_results(
@@ -1547,7 +1603,7 @@ class SearchIndex:
         for exactly those docids, and rebuild the decorated frame locally —
         zero corpus shuffle, sub-second warm. Larger inputs keep the
         distributed left join against the live snapshot."""
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField
 
         missing = [c for c in cols if c not in results.columns]
         if not missing:
@@ -1567,7 +1623,7 @@ class SearchIndex:
                 (lookup.get(r["docid"]) or {}).get(c) for c in missing)
             for r in rows
         ]
-        return self.spark.createDataFrame(data, schema)
+        return _local_frame(self.spark, data, schema)
 
     def _docs_snapshot_schema(self) -> dict:
         """Column name -> StructField of the docs store (parquet footer
@@ -1594,7 +1650,7 @@ class SearchIndex:
         (k-bounded output; postings slices are the query's own terms)."""
         plan = self.plan(query, k, **plan_kw)
         if not plan.term_weights:
-            return self.spark.createDataFrame([], "docid long, term string, part double")
+            return _local_frame(self.spark, [], "docid long, term string, part double")
         top = self.execute(plan, mode=mode).select("docid").collect()
         docids = np.array(sorted(r["docid"] for r in top), dtype=np.int64)
         readers = self._readers_for(_plan_terms(plan))
@@ -1699,9 +1755,7 @@ class SearchIndex:
                 (int(dd), "~words", float(c * offset_val))
                 for dd, c in zip(docids, wcnt) if c > 0
             )
-        return self.spark.createDataFrame(
-            rows, "docid long, term string, part double"
-        )
+        return _local_frame(self.spark, rows, "docid long, term string, part double")
 
     def fetch_documents(self, results: DataFrame) -> DataFrame:
         """Join ranked results back to the canonical document snapshot
@@ -1813,7 +1867,8 @@ def hybrid_search(
             scores.get(r["docid"], 0.0) + semantic_ratio * r["sem"] / sem_den
         )
     top = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
-    return ix.spark.createDataFrame(
+    return _local_frame(
+        ix.spark,
         [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
         "rank int, docid long, score double",
     )
@@ -1863,7 +1918,8 @@ def hybrid_search_rrf(
     ):
         scores[r["docid"]] = scores.get(r["docid"], 0.0) + 1.0 / (rrf_k + rank)
     top = sorted(scores.items(), key=lambda t: (-t[1], t[0]))[:k]
-    return ix.spark.createDataFrame(
+    return _local_frame(
+        ix.spark,
         [(i + 1, int(d), float(s)) for i, (d, s) in enumerate(top)],
         "rank int, docid long, score double",
     )

@@ -60,6 +60,7 @@ from search_engine_spark.index import (
     staged_write,
     write_meta,
 )
+from search_engine_spark.query import _local_frame
 
 
 # Horizon meaning "dead in every generation, forever". Used whenever the
@@ -370,7 +371,10 @@ def delete_documents(spark: SparkSession, index_dir: str, pks: list) -> dict:
     """Tombstone documents by external id (reference T3)."""
     paths, meta, config = _load(spark, index_dir)
     existing = spark.read.parquet(paths.doc_stats).select("docid", "pk")
-    pk_df = spark.createDataFrame([(p,) for p in pks], f"pk {existing.schema['pk'].dataType.simpleString()}")
+    pk_df = _local_frame(
+        spark, [(p,) for p in pks],
+        f"pk {existing.schema['pk'].dataType.simpleString()}",
+    )
     tomb = existing.join(pk_df, "pk").select("docid")
     # docid_col: horizon = max_gen + 1 — dead in every generation that
     # exists today; a later re-add of the SAME docid into a newer generation

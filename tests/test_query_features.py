@@ -246,7 +246,7 @@ def test_fetch_documents_point_read_no_corpus_scan(feature_index):
     plan = out._jdf.queryExecution().executedPlan().toString()
     # no corpus FileScan; the source is the driver-built k-row local frame
     # (the only Exchange allowed is orderBy's range partition over k rows)
-    assert "FileScan" not in plan and "ExistingRDD" in plan, plan
+    assert "FileScan" not in plan and "LocalTableScan" in plan, plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
     snip = ix.highlight_results(ix.search("pizza", k=2), "pizza")
     plan = snip._jdf.queryExecution().executedPlan().toString()
@@ -690,3 +690,123 @@ def test_search_many_empty_results_keep_caller_qid_type(search_index):
     assert hit.unionByName(empty_union).count() == hit.count()
     str_empty = search_index.search_many([("s", "zzqq vvrr")], k=3)
     assert str_empty.schema["query_id"].dataType.simpleString() == "string"
+
+
+# ---------------------------------------------------------------------------
+# driver-built results are local relations with the documented schemas
+# ---------------------------------------------------------------------------
+
+
+def _shape(df):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema.fields]
+
+
+def _out_shape(pk_t):
+    return [("rank", "int", True), ("docid", "bigint", True),
+            ("pk", pk_t, True), ("score", "double", True)]
+
+
+@pytest.mark.parametrize("which", ["bigint_pk", "string_pk"])
+def test_search_result_schema(which, feature_index, search_index, monkeypatch):
+    """Driver and cluster paths, filtered or not, give (rank, docid, pk of
+    the index's pk type, score), all nullable; an empty result types pk as
+    string; a pk the lookup cannot find comes back as None."""
+    ix, pk_t = ((feature_index[0], "bigint") if which == "bigint_pk"
+                else (search_index, "string"))
+    q = "new york pizza web search"
+    for kw in ({"execution": "driver"}, {"execution": "cluster"},
+               {"filter_ast": {"lang": {"$in": ["en", "de"]}}}):
+        res = ix.search(q, k=3, **kw)
+        assert _shape(res) == _out_shape(pk_t), kw
+        assert len(res.collect()) == 3, kw
+    for empty in (ix.search("zzqqx", k=3),  # no indexed word
+                  ix.search(q, k=3, filter_ast={"lang": "xx"})):
+        assert _shape(empty) == _out_shape("string")
+        assert empty.collect() == []
+    monkeypatch.setattr(ix, "_pk_lookup", lambda docids: {})
+    for execution in ("driver", "cluster"):
+        res = ix.search(q, k=3, execution=execution)
+        assert _shape(res) == _out_shape(pk_t)
+        assert [r["pk"] for r in res.collect()] == [None] * 3
+
+
+@pytest.mark.parametrize("qids", [(10, 11, 12), ("a", "b", "c")])
+def test_search_many_driver_and_distributed_tails_agree(qids, search_index, monkeypatch):
+    """search_many merges small batches on the driver and large ones with
+    a window + pk join: both tails give the same rows (raw scores
+    included) and the same schema."""
+    from search_engine_spark import query
+
+    texts = ["web search engine", "crawl data page", "zzqqnotaword"]
+    batch = list(zip(qids, texts))
+    qid_t = "bigint" if isinstance(qids[0], int) else "string"
+    want_shape = [("query_id", qid_t, True), ("rank", "int", False),
+                  ("docid", "bigint", True), ("pk", "string", True),
+                  ("score", "double", True)]
+
+    def run():
+        df = search_index.search_many(batch, k=4)
+        return _shape(df), sorted(tuple(r) for r in df.collect())
+
+    shape_drv, rows_drv = run()
+    monkeypatch.setattr(query, "DRIVER_TAIL_MAX_ROWS", 0)
+    shape_dist, rows_dist = run()
+    assert shape_drv == shape_dist == want_shape
+    assert rows_drv == rows_dist
+    assert {r[0] for r in rows_drv} == set(qids[:2])
+    assert all(r[3] is not None for r in rows_drv)
+
+
+def test_details_fetch_and_hybrid_schemas(spark, search_index, monkeypatch):
+    """score_details, fetch_documents and both hybrid fusions keep their
+    schemas; fetch_documents' point-read frame equals the distributed join
+    (timestamp attribute included)."""
+    import numpy as np
+
+    from search_engine_spark.query import hybrid_search, hybrid_search_rrf
+
+    details = [("docid", "bigint", True), ("term", "string", True),
+               ("part", "double", True)]
+    assert _shape(search_index.score_details("web search", k=3)) == details
+    empty = search_index.score_details("zzqqx", k=3)
+    assert _shape(empty) == details and empty.collect() == []
+
+    res = search_index.search("web search", k=3)
+    local = search_index.fetch_documents(res)
+    monkeypatch.setattr(search_index, "_DOC_FETCH_DRIVER_MAX", 0)
+    joined = search_index.fetch_documents(res)
+    # the join puts docid first; names, types and values are the same
+    assert sorted(_shape(local)) == sorted(_shape(joined))
+    assert ("warc_ts", "timestamp", True) in _shape(local)
+    assert [r.asDict() for r in local.collect()] == [
+        r.asDict() for r in joined.collect()]
+
+    rng = np.random.default_rng(5)
+    ids = [r["docid"] for r in res.collect()]
+    emb = spark.createDataFrame(
+        [(d, [float(x) for x in rng.normal(size=4)]) for d in ids],
+        "vec_id long, embedding array<float>",
+    )
+    fused = [("rank", "int", True), ("docid", "bigint", True),
+             ("score", "double", True)]
+    for fn in (hybrid_search, hybrid_search_rrf):
+        out = fn(search_index, emb, "web search", [1.0, 0.0, 0.0, 0.0], k=3)
+        assert _shape(out) == fused, fn.__name__
+        assert [r["rank"] for r in out.collect()] == [1, 2, 3]
+
+
+def test_cluster_search_collect_starts_no_job(spark, search_index):
+    """The cluster path merges shard top-k on the driver and returns a
+    local relation: execute() runs the scoring job, collect() runs none."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("cluster-execute", "execute")
+        df = search_index.search("web search engine", k=5, execution="cluster")
+        sc.setJobGroup("cluster-collect", "collect")
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == 5
+    assert tracker.getJobIdsForGroup("cluster-execute")
+    assert tracker.getJobIdsForGroup("cluster-collect") == []

@@ -273,6 +273,15 @@ def test_apply_bpe_segments_match_reference(spark):
         assert got[i] == want
 
 
+def test_bpe_pairs_reads_the_column_it_is_given(spark):
+    from search_engine_spark.pipelines.bpe import _pairs
+
+    df = spark.createDataFrame([(["a", "b", "c"],), (["x"],)], "segs array<string>")
+    got = [[(p["l"], p["r"]) for p in r[0]]
+           for r in df.select(_pairs(F.col("segs"))).collect()]
+    assert got == [[("a", "b"), ("b", "c")], []]
+
+
 def test_index_stats(spark, index_dir):
     from search_engine_spark.query import SearchIndex
 
@@ -289,6 +298,28 @@ def test_index_stats(spark, index_dir):
     # one field_<attr> row per stored attribute, fully populated corpus
     fields = {k for k in got if k.startswith("field_")}
     assert fields and all(got[f] == got["n_docs"] for f in fields)
+
+
+def test_index_stats_quotes_attribute_names(spark, tmp_path):
+    """Attribute names that are not SQL identifiers, or hold a quote,
+    still get their field_<attr> row."""
+    from search_engine_spark.build import build_index
+    from search_engine_spark.config import IndexConfig
+    from search_engine_spark.query import SearchIndex
+
+    df = spark.createDataFrame(
+        [(0, "alpha beta", 3, "x"), (1, "beta gamma", None, "y")],
+        "doc_id long, text string, `n-links` int, `it's` string",
+    )
+    cfg = IndexConfig(text_col="text", pk_col="doc_id", ts_col=None,
+                      docid_col="doc_id", attr_cols=("n-links", "it's"),
+                      num_shards=2, num_buckets=2)
+    d = str(tmp_path / "idx")
+    build_index(spark, df, d, cfg)
+    got = {r["stat"]: r["value"] for r in SearchIndex(spark, d).stats().collect()}
+    assert got["n_docs"] == 2.0
+    assert got["field_n-links"] == 1.0
+    assert got["field_it's"] == 2.0
 
 
 def test_ngram_counts_known_grams(spark):
@@ -337,6 +368,23 @@ def test_pq_encode_matches_numpy_argmin(spark):
     top = pq_adc_topk(emb, cb, [float(x) for x in vecs[0]], k=5, m=m).collect()
     assert top[0]["rank"] == 1 and top[0]["adist"] >= 0.0
     assert [r["adist"] for r in top] == sorted(r["adist"] for r in top)
+
+
+@pytest.mark.parametrize("fn", ["pq_codebooks", "pq_encode"])
+@pytest.mark.parametrize("case", ["empty", "dim_not_divisible"])
+def test_pq_rejects_empty_input_and_indivisible_dim(spark, fn, case):
+    """An empty frame, or a dimension m does not divide (which would drop
+    the trailing components), is a ValueError, not a TypeError or a
+    silently truncated code."""
+    from search_engine_spark.pipelines import similarity
+
+    rows = [] if case == "empty" else [(0, [1.0] * 6), (1, [0.5] * 6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    args = () if fn == "pq_codebooks" else (
+        spark.createDataFrame([], "sub int, code int, svec array<double>"),)
+    match = "empty input" if case == "empty" else "dim 6 not divisible by m=4"
+    with pytest.raises(ValueError, match=f"{fn}: {match}"):
+        getattr(similarity, fn)(emb, *args, m=4)
 
 
 def test_ivf_pq_topk_candidates_from_probed_lists_only(spark):
